@@ -111,188 +111,12 @@ def _register_all() -> None:
     )
 
 
-# The driver's correctness gate covers a prefix of the registry
-# (~the first 50 entries in dict order) per round, so we order
-# not-yet-driver-verified slugs FIRST to maximize fresh coverage per
-# round; previously-green slugs follow in their original order.
-#
-# "Already green" is DERIVED from the CORRECTNESS_r*.json files the
-# driver writes at the repo root — latest round wins per slug — so a
-# testdata regeneration that flips old greens to red (round 3) rotates
-# them back into the graded window automatically instead of rotting in
-# a hardcoded list.
-
-# Slugs whose green rows predate a semantic change to the query or its
-# oracle: the old green was graded against behavior that no longer
-# exists, so treat them as fresh until a round >= the cutoff re-grades
-# them. (r4 cutoffs: the 2026-08-13 testdata regeneration changed
-# events.ts encoding; r5 cutoffs: pii-redact gained positive-injection
-# verification, the multimodal decoders became real.)
-_REGRADE_BEFORE_ROUND = {
-    "filter-grep": 4,
-    "proj-safe-text": 4,
-    "proj-nested-get": 4,
-    "join-range-events": 4,
-    "join-asof-events": 4,
-    "text-pii-redact": 5,
-    "mm-decode-features": 5,
-    "mm-resize": 5,
-    # r7: count columns widened int -> bigint (ANSI overflow safety)
-    "text-vocab-topk": 7,
-    # r7 close: oracles rewritten for NULL-faithful `not in` / grep -v
-    # semantics (IS NULL disjunct / COALESCE TRUE); values identical on
-    # the driver data but the graded pair changed — rows before r7
-    # graded the old pair (the marker equals the round that first
-    # grades the new code, so its own fresh row counts)
-    "filter-membership": 7,
-    "filter-grep-v": 7,
-    # r7 close: global ranking moved off the single-partition window
-    # onto the range-partitioned two-pass form (same exact values)
-    "win-percent-rank": 7,
-    "win-ntile-quartiles": 7,
-    # (pipeline-pack-sequences' oracle went NULL-faithful in the r7
-    # fourth window — IS NOT DISTINCT FROM in the recursive packing
-    # join; values identical on the driver data. NO marker entry: its
-    # r5 row is already stale under _STALE_AFTER_ROUNDS, so the
-    # regrade is queued anyway, and a marker would jump it into the
-    # CURRENT round's promised 11+39 window.)
-    #
-    # r8: money aggregates moved from order-dependent SUM(double) to
-    # exact decimal sums (queries/__init__.py::dec_rev / dec_money and
-    # their SQL twins) in query AND oracle — values identical on the
-    # current testdata (sweep-verified at 3 SFs) but the graded pair
-    # changed; ts-resample-ohlc open/close now SKIP NULL prices like
-    # the oracle's arg_min/arg_max; agg-sketch-rollup's exact/sketch
-    # join went null-safe so a NULL event_type group survives. Each
-    # carries a round-8 defer marker below so the regrade waits for
-    # round 9 instead of displacing this round's promised window.
-    "olap-pricing-summary": 9,
-    "olap-revenue-by-nation": 9,
-    "olap-top-orders": 9,
-    "olap-nation-rank-window": 9,
-    "olap-monthly-revenue-lag": 9,
-    "olap-rollup-summary": 9,
-    "olap-grouping-sets": 9,
-    "olap-cube-summary": 9,
-    # volume-shipping / market-share / stream-tumbling-agg were
-    # ALREADY round-8 window fillers (r4-vintage): cutoff 8 — this
-    # round grades the new pair directly, no defer needed
-    "olap-volume-shipping": 8,
-    "olap-market-share": 8,
-    "stream-tumbling-agg": 8,
-    "olap-important-stock": 9,
-    "join-skew-salted": 9,
-    "ts-resample-ohlc": 9,
-    "agg-sketch-rollup": 9,
-    "win-running-total": 9,
-    "olap-dormant-customers": 9,
-    # r8 second window: the graded plan moved from the naive
-    # per-stratum window onto the two-phase rank-threshold refinement
-    # (ext/curation.py::stratified_exact_k) — same exact values (the
-    # oracle IS the naive form), but the executed plan changed
-    "sample-stratified-exact": 9,
-    # r10: the symmetric jaccard family switched onto the PPJoin
-    # prefix path (ext/dedup.py::ngram_jaccard_pairs_prefix) with
-    # EXACT-semantics oracles (the capped oracle minus its QUALIFY) —
-    # the rehearsed round-9 switch. Values identical on the driver
-    # data (the sf0.01 df cap was a no-op), but query AND oracle both
-    # changed, so the r8/r9 greens graded a pair that no longer
-    # exists. No defer marker: these lead the r10 window at vintage -1
-    # (the verdict's plan: 3 changed pairs + 47 oldest regrades).
-    "dedup-ngram-jaccard": 10,
-    "dedup-cluster": 10,
-    "dedup-survivors": 10,
-    # r13 (ADVICE r12 fixes): dedup-semantic's centroid table is now
-    # localCheckpoint-materialized so every property branch shares one
-    # learned-cell snapshot (same values on any single run, but the
-    # graded plan changed); layout-zorder's normalize_to_bits gained
-    # NULL passthrough (identical on the NULL-free driver data, but
-    # the graded expression changed). Both regrade in the r13 window.
-    "dedup-semantic": 13,
-    "layout-zorder": 13,
-}
-
-
-# A green row older than this many rounds is treated as stale: the slug
-# rotates back into the graded window (oldest vintage first) so no
-# slug's latest driver row ever rots more than ~2 rounds behind HEAD.
-_STALE_AFTER_ROUNDS = 2
-
-
-# Slugs whose window entry must WAIT for the in-flight round to land:
-# {slug: round}. Covers two cases with one mechanism: (a) never-graded
-# slugs registered AFTER the current round's 50-slot window already
-# filled, and (b) slugs whose query/oracle pair changed after the
-# freeze (also carrying a _REGRADE_BEFORE_ROUND cutoff) — in both, the
-# slug would otherwise lead the window at vintage -1 and displace
-# regrades the round's plan promised. While the newest correctness
-# file on disk predates the marker round, the slug sorts at an
-# artificial vintage AFTER every real regrade in the fresh block; the
-# moment the marker round's own CORRECTNESS file lands, the marker
-# expires and the slug becomes an ordinary vintage -1 lead for the
-# next round. Round 6 filled its window exactly (43 never-graded +
-# the 7 r1-vintage regrades), so slugs registered after that freeze
-# carry marker 6: deferred while max_round < 6, front of the window
-# from round 7 on.
-_DEFER_NEW_UNTIL_ROUND: dict[str, int] = {
-    "mm-audio-features": 6,
-    "olap-waiting-suppliers": 6,
-    "events-path-transitions": 6,
-    "pipeline-dq-expectations": 6,
-    "text-lm-score": 6,
-    "ts-resample-ohlc": 6,
-    "text-keyword-tfidf": 6,
-    "pipeline-upsert-latest": 6,
-    "graph-triangle-count": 6,
-    "win-cume-distinct": 6,
-    "events-last-touch": 6,
-    # round-7 registrations: the round-7 window is exactly the 11
-    # round-6 leads + 39 r3-vintage regrades, so these wait for round 8
-    "snk-delta-sync": 7,
-    "src-ftp-walk": 7,
-    # registered in the round-7 close window, paired with the
-    # sim-topk-bruteforce retirement (identical-oracle duplicate of
-    # sim-topk-arrow) so N stays 200
-    "dedup-substring": 7,
-    # round-8 registration, paired with the join-edge-gen retirement
-    # (identical oracle to snk-json-kgx): waits out round 8 so the
-    # promised 3 + 47 regrade window stays intact, leads round 9
-    "dedup-strip-spans": 8,
-    # round-8 changed pairs (see the r8 block in _REGRADE_BEFORE_ROUND):
-    # deferred while round 8 is in flight, lead round 9's window
-    "olap-pricing-summary": 8,
-    "olap-revenue-by-nation": 8,
-    "olap-top-orders": 8,
-    "olap-nation-rank-window": 8,
-    "olap-monthly-revenue-lag": 8,
-    "olap-rollup-summary": 8,
-    "olap-grouping-sets": 8,
-    "olap-cube-summary": 8,
-    "olap-important-stock": 8,
-    "join-skew-salted": 8,
-    "ts-resample-ohlc": 8,
-    "agg-sketch-rollup": 8,
-    "win-running-total": 8,
-    "olap-dormant-customers": 8,
-    "sample-stratified-exact": 8,
-    # round-12 close registration: the r12 window is the 13 promotions
-    # + the 14 r7-vintage regrades + the oldest r8s; this waits out
-    # round 12 and leads round 13
-    "join-asof-tolerance": 12,
-    "mm-phash-clusters": 12,
-}
-
-
-def _deferred_vintage(max_round: int) -> dict[str, int]:
-    """Artificial vintages for still-deferred slugs (never-graded OR
-    changed-pair): one past the newest graded round, so they trail
-    every real regrade and stale green but still precede the
-    current-green tail."""
-    return {
-        slug: max_round + 1
-        for slug, rnd in _DEFER_NEW_UNTIL_ROUND.items()
-        if max_round < rnd
-    }
+# The driver's correctness gate grades a prefix of the registry (the
+# first 50 entries in dict order) each round, so the registry order
+# decides which slugs it grades. That order is DERIVED from the
+# CORRECTNESS_r*.json files the driver writes at the repo root (latest
+# round wins per slug), so a testdata regeneration that flips old greens
+# to red rotates them back into the graded window automatically.
 
 
 def _driver_rows(root: str | None = None) -> tuple[dict[str, tuple[int, bool]], int]:
@@ -340,200 +164,22 @@ def _driver_rows(root: str | None = None) -> tuple[dict[str, tuple[int, bool]], 
     return latest, max_round
 
 
-def _green_set(
-    latest: dict[str, tuple[int, bool]], max_round: int
-) -> set[str]:
-    """Slugs with a CURRENT green driver row given pre-fetched rows
-    (fails, never-graded and stale-vintage greens are all excluded so
-    they rotate forward)."""
-    return {
-        slug
-        for slug, (rnd, ok) in latest.items()
-        if ok
-        and rnd >= _REGRADE_BEFORE_ROUND.get(slug, 0)
-        and max_round - rnd < _STALE_AFTER_ROUNDS
-    }
-
-
-def _driver_green() -> set[str]:
-    return _green_set(*_driver_rows())
-
-
-# Measured warmed per-query wall time at sf0.01 (seconds, local[8]) for
-# the not-yet-driver-verified slugs. If the driver's ~50-slug coverage
-# cap is a TIME budget rather than a count, cheap-first ordering
-# maximizes how many fresh slugs get a green row per round; under a
-# count cap the order is irrelevant, so cheap-first dominates either
-# way. Unlisted slugs sort at 0.5 s.
-_EST_COST = {
-    "set-union-append": 0.242, "set-except": 0.749, "set-intersect": 0.504,
-    "set-distinct": 0.258, "str-split-part": 0.17, "str-startswith": 0.15,
-    "str-case-trim": 0.161, "str-concat-format": 0.15, "str-regex": 0.136,
-    "date-now": 0.153, "math-count-inc": 0.183, "arr-parse-literal": 0.15,
-    "map-enum-labels": 0.169, "map-gender-code": 0.157, "json-access": 0.134,
-    "json-shape-dispatch": 0.177, "src-csv": 0.288, "snk-csv": 0.314,
-    "src-json-doc": 0.271, "src-rest-paginated": 0.49, "src-rest-keyed": 0.336,
-    "src-ftp-files": 0.614, "src-xml": 1.094, "snk-xml": 0.571,
-    "src-fs-recursive": 0.426, "snk-json-kgx": 0.562, "snk-object-store": 0.522,
-    "src-dug-api": 0.287, "snk-xml-gapexchange": 0.397, "text-langid": 0.213,
-    "text-quality": 0.198, "text-tokens": 0.15, "text-fingerprint": 0.132,
-    "dedup-exact": 0.249, "dedup-minhash": 0.817, "dedup-minhash-pairs": 1.183,
-    "dedup-ngram-jaccard": 2.088, "dedup-cluster": 2.529,
-    "dedup-survivors": 2.678, "dedup-simhash": 1.804,
-    "dedup-simhash-pairs": 3.126, "dedup-embedding": 0.758,
-    # (sim-topk-bruteforce retired round 7 — cost row deleted with it,
-    # matching the join-fuzzy-name retirement's cleanup)
-    "sim-ivf-topk": 1.041,
-    "sim-ivf-recall": 1.25, "sim-topk-multiquery": 0.772,
-    "mm-binary-meta": 0.205, "mm-decode-features": 0.468,
-    "mm-frame-sample": 0.269, "dedup-embedding-lsh": 1.231, "mm-resize": 0.37,
-    "sim-topk-arrow": 0.488, "sim-kmeans-cells": 2.665,
-    "pipeline-bdc-summary": 0.7, "pipeline-bdc-quarantine": 0.404,
-    "pipeline-bdc-scoreboard": 1.139, "pipeline-heal-variable-index": 0.487,
-    "stream-tumbling-agg": 0.437, "stream-sliding-agg": 0.477,
-    "stream-session-window": 0.443, "stream-dedup-first": 0.452,
-    "stream-marker-sessionize": 0.535,
-    # new this round; sorted last so it can't displace older fresh slugs
-    "dedup-minhash-estimate": 9.9,
-    "text-vocab-topk": 10.1, "pipeline-hash-sample": 10.2,
-    "text-decontaminate": 10.3, "pipeline-pack-sequences": 10.4,
-    "pipeline-curate-corpus": 10.5, "sim-lsh-recall": 10.6,
-    "sim-lsh-recall-banded": 10.7, "agg-approx-distinct": 10.8,
-    "pipeline-mix-sample": 10.9,
-    # round-2 second batch; sorted after the first batch
-    "olap-returned-items": 11.0, "olap-cust-order-dist": 11.1,
-    "olap-promo-share": 11.2, "olap-small-qty-revenue": 11.3,
-    # round-4 batch; sorted after everything older so the 40 carried
-    # fresh slugs keep the front of the 50-slot driver window and these
-    # 10 exactly fill the back of it
-    "olap-order-priority": 12.0, "olap-volume-shipping": 12.1,
-    "olap-market-share": 12.2, "events-funnel": 12.3,
-    "events-retention": 12.4, "events-heavy-hitters": 12.5,
-    "text-word-repetition": 12.6, "text-bigram-topk": 12.7,
-    "text-idf": 12.8, "text-pii-redact": 12.9,
-    # round-5 batch (ordering among the never-graded front is cosmetic
-    # — vintage drives the window; costs measured at sf0.01 warmed)
-    "xml-modify-study-name": 13.0, "join-skew-salted": 13.1,
-    "olap-cheapest-supplier": 13.2, "olap-important-stock": 13.3,
-    "events-stickiness": 13.4, "text-zipf-slope": 13.5, "snk-orc": 13.6,
-    "agg-approx-quantiles": 13.7,
-    # join-fuzzy-name retired round 7 (reference-only baseline)
-    # round-6 batch
-    "join-fuzzy-qgram": 14.0, "olap-grouping-sets": 14.1,
-    "stream-stream-join": 14.2, "events-props-flatten": 14.3,
-    "events-retention-pivot": 14.4, "events-stickiness-approx": 14.5,
-    "olap-cube-summary": 14.6, "win-running-total": 14.7,
-    "sample-stratified-exact": 14.8,
-    # round-6 late addition: sorted LAST among the never-graded so it
-    # takes the final fresh slot without displacing the 7 r1-vintage
-    # regrades from the 50-slot window (only the r3-green tail moves)
-    "text-chunk-overlap": 14.9,
-    # round-6 ingest-QC / reshape batch: 6 slugs, sized to exactly fill
-    # the fresh half of the 50-slot window alongside the 37 earlier
-    # round-6 slugs while keeping the 7 r1-vintage regrades inside it
-    # (43 never-graded + 7 r1 = 50; only the r3-green tail defers)
-    "win-moving-avg-range": 15.0, "ts-gapfill-locf": 15.1,
-    "agg-unpivot-melt": 15.2, "dq-profile": 15.3,
-    "pipeline-snapshot-diff": 15.4, "audit-row-hash": 15.5,
-    # registered after the round-6 freeze — deferred to round 7 via
-    # _DEFER_NEW_UNTIL_ROUND, so cost only orders them among themselves
-    "mm-audio-features": 16.0, "olap-waiting-suppliers": 16.1,
-    "events-path-transitions": 16.2, "pipeline-dq-expectations": 16.3,
-    "text-lm-score": 16.4, "ts-resample-ohlc": 16.5,
-    "text-keyword-tfidf": 16.6, "pipeline-upsert-latest": 16.7,
-    "graph-triangle-count": 16.8, "win-cume-distinct": 16.9,
-    "events-last-touch": 17.0,
-    # round-7 registrations (all deferred to round 8, where the three
-    # of them lead the window): snk-delta-sync / src-ftp-walk carry
-    # the default 0.5; dedup-substring ordinal-sorted after them
-    # (~2.1 s warmed at sf0.01 — heaviest of the three either way)
-    "dedup-substring": 18.0,
-    # round-8 registration (deferred to round 9 via marker)
-    "dedup-strip-spans": 19.0,
-    # round-11 promotions (VERDICT r10 item 1/6): never-graded, so
-    # they lead the r11 window; cheap-first among themselves, the
-    # learned-index composition last (~8 s warmed at sf0.01 — index
-    # build included)
-    "curate-temperature-mix": 20.0,
-    "dedup-bloom-exact": 20.1,
-    "dedup-paragraph": 20.2,
-    "dedup-winnow": 20.3,
-    "sim-ivf-pq-topk": 20.4,
-    "text-kn-lm-score": 20.5,
-    "text-kn-score-heldout": 20.6,
-    "agg-sketch-partial-merge": 20.7,
-    "graph-pagerank": 20.8,
-    "layout-zorder": 20.9,
-    "dedup-winnow-pairs": 21.0,
-    # round-12 promotions (VERDICT r11 items 4/5): md5-deterministic
-    # library operators graded with exact value oracles, then the
-    # recall/population-bound pair — never-graded, so they lead the
-    # r12 window ahead of the 14 r7-vintage regrades
-    "text-contamination-report": 21.1,
-    "pipeline-shuffle-corpus": 21.2,
-    "curate-gate-documents": 21.3,
-    "curate-perplexity-buckets": 21.4,
-    "dedup-semantic": 21.5,
-    "curate-dsir-weights": 21.6,
-    "text-bm25-topk": 21.7,
-    "curate-dsir-resample": 21.8,
-    "sim-hard-negatives": 21.9,
-    "text-ngram-novelty": 22.0,
-    "sim-nearest-centroid": 22.1,
-    "events-volume-anomaly": 22.2,
-    "text-token-entropy": 22.3,
-    "join-asof-tolerance": 22.4,
-    "mm-phash-clusters": 22.5,
-    # round-13 promotions (VERDICT r12 items 5/6): the composed CCNet
-    # arc (all four stages already graded) and the PQ reranked-top-k
-    # population oracle — never-graded, so they lead the r13 window
-    # right behind the two r12-close defers
-    "ccnet-curate": 22.6,
-    "sim-pq-topk-reranked": 22.7,
-    "curate-quality-classifier": 22.8,
-    "dedup-hot-spans": 22.9,
-    "dedup-bloom-probe": 23.0,
-}
-
-
 def _prioritized(keys):
-    """Order the registry so the driver's ~50-slot graded prefix does
-    the most useful work each round: failed / never-graded slugs first,
-    then stale greens oldest-vintage-first (so every slug's green row is
-    refreshed within ~2 rounds), then current greens — themselves
-    vintage-ordered so any leftover window slots re-grade the oldest."""
-    keys = list(keys)
-    latest, max_round = _driver_rows()
-    green = _green_set(latest, max_round)
-    order = {k: i for i, k in enumerate(keys)}
-    deferred = _deferred_vintage(max_round)
+    """Order the registry for the driver's graded prefix: one stable sort
+    by ``(vintage, registry position)``. A slug's vintage is the round of
+    its latest driver row when that row is green, and -1 when the row
+    failed or the slug was never graded, so those lead the window and
+    greens follow oldest first. A slug graded green this round sorts
+    behind every slug graded earlier, so with a W-slot window all N
+    slugs are graded within ceil(N / W) rounds."""
+    latest, _ = _driver_rows()
 
     def vintage(k):
-        rnd, ok = latest.get(k, (0, False))
-        if not ok or rnd < _REGRADE_BEFORE_ROUND.get(k, 0):
-            if k in deferred:
-                # registered — or semantically changed — after this
-                # round's window filled: wait behind the promised
-                # regrades until next round (never-graded AND
-                # changed-pair slugs both defer; a changed pair's old
-                # green is stale bookkeeping, not a correctness risk,
-                # so it must not displace the window's promises)
-                return deferred[k]
-            # failed, never-graded, or semantically-changed: their old
-            # rows are meaningless, so they must lead the window, not
-            # trail the merely-old stale greens
-            return -1
-        return rnd
+        rnd, ok = latest.get(k, (-1, False))
+        return rnd if ok else -1
 
-    fresh = sorted(
-        (k for k in keys if k not in green),
-        key=lambda k: (vintage(k), _EST_COST.get(k, 0.5), order[k]),
-    )
-    tail = sorted(
-        (k for k in keys if k in green),
-        key=lambda k: (vintage(k), order[k]),
-    )
-    return fresh + tail
+    # sorted() is stable: registry position breaks ties within a vintage
+    return sorted(keys, key=vintage)
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -517,8 +517,7 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
 # surface (ext/similarity.py::topk_bruteforce — the narrow-vector
 # comparison point, used by sim-ivf-recall's truth side below and by
 # tools/scale_smoke.py) and keeps its own oracle-parity test,
-# tests/test_sim_baseline.py, exactly like the join-fuzzy-name
-# precedent (tests/test_fuzzy_baseline.py).
+# tests/test_sim_baseline.py.
 _RETIRED_TOPK_BRUTEFORCE_ORACLE = """
     WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
     SELECT vec_id,
@@ -1191,10 +1190,9 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (doc_id, pos) of each duplicated fingerprint, gaps-and-islands runs
 # for removal and protection, and the token-interval keep rule
 # (kept iff not removal-covered or canonical-covered, a run [p0,p1]
-# covering tokens p0..p1+k-1). Registered round 8 paired with the
-# join-edge-gen retirement (identical oracle to snk-json-kgx), so
-# N stays 200. Short/NULL docs pass through as normalized text —
-# the toks LEFT JOIN keeps every input doc in the output.
+# covering tokens p0..p1+k-1). Short/NULL docs pass through as
+# normalized text — the toks LEFT JOIN keeps every input doc in the
+# output.
 _STRIP_SPANS_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,

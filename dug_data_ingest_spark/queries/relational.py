@@ -456,29 +456,6 @@ def join_study_dd_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select("c_custkey", "label", "dd_id", "o_orderstatus")
 
 
-# Retired from the registry in round 8: it graded the IDENTICAL
-# oracle as snk-json-kgx (which derives the same edges AND round-trips
-# them through the KGX sink — one registry slot per logical query,
-# the sim-topk-bruteforce precedent). The edge_gen operator and this
-# query stay library surface with their own oracle parity in
-# tests/test_edge_gen_baseline.py; the freed slot registered
-# dedup-strip-spans (queries/extensions.py), holding N = 200.
-_RETIRED_EDGE_GEN_ORACLE = """
-    SELECT 'CUST:' || CAST(o_custkey AS VARCHAR) AS subject,
-           'biolink:related_to' AS predicate,
-           'ORD:' || CAST(o_orderkey AS VARCHAR) AS object
-    FROM orders
-"""
-
-
-def join_edge_gen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders").select(
-        F.concat(F.lit("CUST:"), F.col("o_custkey").cast("string")).alias("subj"),
-        F.concat(F.lit("ORD:"), F.col("o_orderkey").cast("string")).alias("obj"),
-    )
-    return jn.edge_gen(orders, "subj", "obj")
-
-
 @query(
     "join-skew-salted",
     oracle=f"""
@@ -886,91 +863,6 @@ def set_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return st.distinct_rows(load(spark, sf_dir, "customer").select("c_mktsegment"))
 
 
-# RETIRED from the registry in round 7 (SCALE.md "retire redundant
-# slugs" + VERDICT r6 "no production-path slug carrying a known
-# degeneracy"): join-fuzzy-qgram is the production fuzzy join; this
-# function stays as the measured length-band baseline it documents
-# (the controlled comparison that justified the q-gram design) and is
-# still exercised by tests/test_fuzzy_baseline.py.
-_RETIRED_FUZZY_NAME_ORACLE = """
-    WITH parts AS (SELECT p_partkey, p_name, length(p_name) AS len FROM part),
-    probes AS (
-      SELECT p_partkey AS probe_id,
-             substr(p_name, 1, length(p_name) - 2) AS probe_name
-      FROM part WHERE p_partkey % 191 = 0
-    ),
-    pb AS (
-      SELECT probe_id, probe_name,
-             CAST(length(probe_name) // 5 AS INT) + unnest([-1, 0, 1]) AS bucket
-      FROM probes
-    )
-    SELECT pb.probe_id, p.p_partkey AS match_id,
-           CAST(levenshtein(pb.probe_name, p.p_name) AS INT) AS lev
-    FROM pb JOIN parts p ON CAST(p.len // 5 AS INT) = pb.bucket
-    WHERE levenshtein(pb.probe_name, p.p_name) <= 2
-    """
-
-
-def join_fuzzy_name(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REFERENCE-ONLY BLOCKING BASELINE — retired from the registry;
-    not the production path. Use ``join-fuzzy-qgram``
-    (operators/joins.py:fuzzy_join_qgram) for real workloads:
-    length-band blocking degenerates on narrow length distributions
-    (see Caveat below). This function remains as the measured
-    comparison point that justifies the q-gram design, verified
-    against ``_RETIRED_FUZZY_NAME_ORACLE`` in
-    tests/test_fuzzy_baseline.py.
-
-    Fuzzy string join (edit distance ≤ 2) with length-band
-    blocking: every 191st part's name, truncated by two characters,
-    is matched back against the part table by levenshtein. The
-    blocking key floor(length/5) (probe side exploded ±1) is
-    COMPLETE for lev ≤ 2 — an edit changes length by at most 2, and
-    values 2 apart land in adjacent width-5 buckets — so candidate
-    generation is an equi-join, never the O(n·m) cross product that a
-    bare theta-join on levenshtein would plan at 100 TB. Probe side
-    broadcasts; levenshtein runs only inside matching buckets.
-
-    Caveat measured at sf0.1: when the corpus length distribution is
-    narrow (TPC-H part names), length buckets are hot and candidate
-    counts grow toward n/|buckets| per probe. The production path for
-    such corpora is ``join-fuzzy-qgram`` (operators/joins.py:
-    fuzzy_join_qgram), which blocks on each probe's rarest trigrams —
-    complete for lev ≤ 2 by pigeonhole and measured 1.6× faster here;
-    this slug stays registered as the simpler blocking's reference
-    point."""
-    parts = load(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", F.length("p_name").alias("len")
-    )
-    probes = (
-        parts.filter(F.col("p_partkey") % 191 == 0)
-        .select(
-            F.col("p_partkey").alias("probe_id"),
-            F.expr("substring(p_name, 1, length(p_name) - 2)").alias(
-                "probe_name"
-            ),
-        )
-        .withColumn(
-            "bucket",
-            F.explode(
-                F.array(
-                    *[
-                        (F.floor(F.length("probe_name") / 5) + d).cast("int")
-                        for d in (-1, 0, 1)
-                    ]
-                )
-            ),
-        )
-    )
-    cands = parts.withColumn("bucket", F.floor(F.col("len") / 5).cast("int"))
-    lev = F.levenshtein(F.col("probe_name"), F.col("p_name"))
-    return (
-        cands.join(F.broadcast(probes), "bucket")
-        .filter(lev <= 2)
-        .select("probe_id", F.col("p_partkey").alias("match_id"), lev.cast("int").alias("lev"))
-    )
-
-
 @query(
     "join-fuzzy-qgram",
     oracle="""
@@ -986,24 +878,20 @@ def join_fuzzy_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_fuzzy_qgram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy string join (lev ≤ 2) with q-gram blocking — the scale
-    path for the join-fuzzy-name scenario on corpora whose LENGTH
-    distribution is narrow (TPC-H part names cluster into few length
-    buckets, so length-band blocking degenerates toward n/|buckets|
-    candidates per probe; rare-trigram blocking does not care about
-    lengths). Same probe construction as join-fuzzy-name: every 191st
-    part's name truncated by two characters, matched back against the
-    part table.
+    """Fuzzy string join (lev ≤ 2) with q-gram blocking: every 191st
+    part's name, truncated by two characters, is matched back against
+    the part table. TPC-H part names cluster into few lengths, so
+    length-band blocking would degenerate toward n/|buckets| candidates
+    per probe; rare-trigram blocking does not depend on lengths.
 
     Because ``fuzzy_join_qgram``'s blocking is COMPLETE for lev ≤ 2
     (operators/joins.py — type/occurrence pigeonhole over the 7 rarest
     corpus-present trigrams per probe), the oracle is the NAIVE
     levenshtein theta-join: the driver's hash compare therefore grades
     not just the values but the blocking's zero-miss property on real
-    data. Reference parity: same fuzzy-matching niche as
-    join-fuzzy-name (the reference's nearest analogue is its manual
-    study-name reconciliation; no file implements fuzzy joins — this is
-    extension surface)."""
+    data. Reference parity: the reference's nearest analogue is its
+    manual study-name reconciliation; no file implements fuzzy joins —
+    this is extension surface."""
     parts = load(spark, sf_dir, "part")
     probes = parts.filter(F.col("p_partkey") % 191 == 0).select(
         F.col("p_partkey").alias("pid"),

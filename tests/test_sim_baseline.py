@@ -4,8 +4,7 @@ it left the registry in round 7: it graded the identical query/oracle
 pair as sim-topk-arrow (one registry slot per logical query), but it
 remains the narrow-vector comparison point against the Arrow scorer,
 the truth side of sim-ivf-recall, and a scale_smoke workload — so it
-keeps its own oracle parity here, like the join-fuzzy-name precedent
-(tests/test_fuzzy_baseline.py)."""
+keeps its own oracle parity here."""
 
 from __future__ import annotations
 
